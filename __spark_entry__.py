@@ -191,25 +191,41 @@ def _epoch_s(c) -> "F.Column":
     return F.unix_seconds(F.col(c).cast("timestamp"))
 
 
+def _text_len_ts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(text_len, ts) per turn: the input of the first/second-half split
+    drift queries."""
+    return _transcripts(spark, sf_dir).select(F.length("text").alias("text_len"), "ts")
+
+
+def _day_text_len(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(part_date, text_len) per turn with non-NULL text: the input of the
+    per-day profile and drift queries."""
+    return (
+        _transcripts(spark, sf_dir)
+        .filter(F.col("text").isNotNull())
+        .select(F.to_date("ts").alias("part_date"), F.length("text").alias("text_len"))
+    )
+
+
 def q_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PSI on turn-length histograms, first half vs second half by event
     time (epsilon-clamped closed form over bucketed proportions). Both
     halves come from ONE conditional aggregate (split_histograms); the
     epoch midpoint is a broadcast scalar subplan, not a driver collect."""
-    t = _transcripts(spark, sf_dir).select(F.length("text").alias("text_len"), "ts")
+    t = _text_len_ts(spark, sf_dir)
     return psi_joined(split_histograms(t, "text_len", "ts", 10.0, 20))
 
 
 def q_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """KS statistic on the same split (max |ECDF diff| over buckets)."""
-    t = _transcripts(spark, sf_dir).select(F.length("text").alias("text_len"), "ts")
+    t = _text_len_ts(spark, sf_dir)
     return ks_joined(split_histograms(t, "text_len", "ts", 10.0, 20))
 
 
 def q_js_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Jensen-Shannon divergence on the same split (bounded, symmetric —
     operators/drift.py:js_joined)."""
-    t = _transcripts(spark, sf_dir).select(F.length("text").alias("text_len"), "ts")
+    t = _text_len_ts(spark, sf_dir)
     return js_joined(split_histograms(t, "text_len", "ts", 10.0, 20))
 
 
@@ -219,7 +235,7 @@ def q_w1_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/drift.py:w1_joined)."""
     from fsharp_data_validation_spark.operators.drift import w1_joined
 
-    t = _transcripts(spark, sf_dir).select(F.length("text").alias("text_len"), "ts")
+    t = _text_len_ts(spark, sf_dir)
     return w1_joined(split_histograms(t, "text_len", "ts", 10.0, 20), 20, 10.0)
 
 
@@ -258,11 +274,7 @@ def q_quantiles_by_day(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate, so this is one shuffle at any scale)."""
     from fsharp_data_validation_spark.operators.stats import exact_quantiles_by_group
 
-    t = (
-        _transcripts(spark, sf_dir)
-        .filter(F.col("text").isNotNull())
-        .select(F.to_date("ts").alias("part_date"), F.length("text").alias("text_len"))
-    )
+    t = _day_text_len(spark, sf_dir)
     return exact_quantiles_by_group(t, "part_date", "text_len", [0.5, 0.95])
 
 
@@ -272,11 +284,7 @@ def q_psi_by_day(spark: SparkSession, sf_dir: str) -> DataFrame:
     drift check (one scan, grid-complete closed form)."""
     from fsharp_data_validation_spark.operators.drift import psi_by_group
 
-    t = (
-        _transcripts(spark, sf_dir)
-        .filter(F.col("text").isNotNull())
-        .select(F.to_date("ts").alias("part_date"), F.length("text").alias("text_len"))
-    )
+    t = _day_text_len(spark, sf_dir)
     return psi_by_group(t, "part_date", "text_len", 25.0, 20)
 
 
@@ -285,11 +293,7 @@ def q_js_by_day(spark: SparkSession, sf_dir: str) -> DataFrame:
     (one-scan grid shape, operators/drift.py:js_by_group)."""
     from fsharp_data_validation_spark.operators.drift import js_by_group
 
-    t = (
-        _transcripts(spark, sf_dir)
-        .filter(F.col("text").isNotNull())
-        .select(F.to_date("ts").alias("part_date"), F.length("text").alias("text_len"))
-    )
+    t = _day_text_len(spark, sf_dir)
     return js_by_group(t, "part_date", "text_len", 25.0, 20)
 
 
@@ -298,11 +302,7 @@ def q_ks_by_day(spark: SparkSession, sf_dir: str) -> DataFrame:
     baseline (same one-scan grid shape as psi_by_day)."""
     from fsharp_data_validation_spark.operators.drift import ks_by_group
 
-    t = (
-        _transcripts(spark, sf_dir)
-        .filter(F.col("text").isNotNull())
-        .select(F.to_date("ts").alias("part_date"), F.length("text").alias("text_len"))
-    )
+    t = _day_text_len(spark, sf_dir)
     return ks_by_group(t, "part_date", "text_len", 25.0, 20)
 
 
@@ -596,11 +596,7 @@ def q_w1_by_day(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/drift.py:w1_by_group)."""
     from fsharp_data_validation_spark.operators.drift import w1_by_group
 
-    t = (
-        _transcripts(spark, sf_dir)
-        .filter(F.col("text").isNotNull())
-        .select(F.to_date("ts").alias("part_date"), F.length("text").alias("text_len"))
-    )
+    t = _day_text_len(spark, sf_dir)
     return w1_by_group(t, "part_date", "text_len", 25.0, 20)
 
 
@@ -636,11 +632,7 @@ def q_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     variant of z-score outlier checks."""
     from fsharp_data_validation_spark.operators.stats import mad_outliers_by_group
 
-    t = (
-        _transcripts(spark, sf_dir)
-        .filter(F.col("text").isNotNull())
-        .select(F.to_date("ts").alias("part_date"), F.length("text").alias("text_len"))
-    )
+    t = _day_text_len(spark, sf_dir)
     return mad_outliers_by_group(t, "part_date", "text_len")
 
 
@@ -758,7 +750,7 @@ def q_cvm_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     max misses. Same one-scan conditional split as psi/ks/js/w1."""
     from fsharp_data_validation_spark.operators.drift import cvm_joined
 
-    t = _transcripts(spark, sf_dir).select(F.length("text").alias("text_len"), "ts")
+    t = _text_len_ts(spark, sf_dir)
     return cvm_joined(split_histograms(t, "text_len", "ts", 10.0, 20), round_to=6)
 
 

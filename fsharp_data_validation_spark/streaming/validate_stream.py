@@ -13,11 +13,15 @@ Stateful additions here:
 
 from __future__ import annotations
 
-from typing import Callable, Optional, Sequence
+import operator
+from functools import reduce
+from itertools import accumulate
+from typing import Sequence
 
 from pyspark.sql import DataFrame, functions as F
 
 from ..functions.compiler import Suite
+from ..operators.drift import bucket, chi2_cell, psi_term
 
 
 def validate_stream(
@@ -249,6 +253,40 @@ def stream_dedup(
     )
 
 
+def _stream_bucket_counts(
+    stream_df: DataFrame,
+    baseline_hist: DataFrame,
+    value_col: str,
+    ts_col: str,
+    window: str,
+    watermark: str,
+    bucket_width: float,
+    n_buckets: int,
+):
+    """The shared front half of the numeric windowed monitors: ONE
+    watermarked window aggregation (win, rows, _c0.._c{n_buckets-1}) with a
+    conditional sum per bucket (Structured Streaming forbids chained
+    aggregations, so the histogram cannot be a second groupBy), plus the
+    baseline's per-bucket proportions as Python floats. The baseline is
+    ``n_buckets`` rows (a few hundred bytes) REGARDLESS of how much data
+    produced it, so collecting it once makes plan literals, not a data
+    collect."""
+    base = {r["bucket"]: r["n"] for r in baseline_hist.collect()}
+    tot = float(sum(base.values())) or 1.0
+    counts = [
+        F.sum((F.col("_bkt") == i).cast("long")).alias(f"_c{i}")
+        for i in range(n_buckets)
+    ]
+    agg = (
+        stream_df.filter(F.col(value_col).isNotNull())
+        .withColumn("_bkt", bucket(value_col, bucket_width, n_buckets))
+        .withWatermark(ts_col, watermark)
+        .groupBy(F.window(ts_col, window).alias("win"))
+        .agg(F.count(F.lit(1)).alias("rows"), *counts)
+    )
+    return agg, [base.get(i, 0) / tot for i in range(n_buckets)]
+
+
 def windowed_drift_stream(
     stream_df: DataFrame,
     baseline_hist: DataFrame,
@@ -266,45 +304,20 @@ def windowed_drift_stream(
     histogram from ``operators.drift.histogram``, e.g. built over last
     month's validated corpus).
 
-    Shape notes for streaming:
-    - Structured Streaming forbids chained aggregations, so the histogram
-      is built as ``n_buckets`` conditional sums inside the ONE watermarked
-      window aggregation (same closed form as ``operators/drift.py``) and
-      PSI is then a row-local expression over those count columns —
-      append-mode compatible, state evicted by the watermark.
-    - the baseline histogram is collected once on the driver: it is
-      ``n_buckets`` rows (a few hundred bytes) REGARDLESS of how much data
-      produced it, so this is a plan-literal, not a data collect. Baseline
-      proportions use the same EPS clamp as the batch PSI.
-    """
-    from ..operators.drift import EPS
-
-    base = {r["bucket"]: r["n"] for r in baseline_hist.collect()}
-    tot = float(sum(base.values())) or 1.0
-
-    b = F.least(
-        F.greatest(F.floor(F.col(value_col) / F.lit(bucket_width)), F.lit(0)),
-        F.lit(n_buckets - 1),
-    ).cast("int")
-    bucketed = (
-        stream_df.filter(F.col(value_col).isNotNull())
-        .withColumn("_bkt", b)
-        .withWatermark(ts_col, watermark)
+    Shape (``_stream_bucket_counts``): one watermarked window aggregation
+    of per-bucket counts, then PSI as a row-local sum of
+    ``operators.drift.psi_term`` over those count columns against the
+    baseline literals — append-mode compatible, state evicted by the
+    watermark, the same EPS clamp as the batch PSI."""
+    agg, q = _stream_bucket_counts(
+        stream_df, baseline_hist, value_col, ts_col, window, watermark,
+        bucket_width, n_buckets,
     )
-    counts = [
-        F.sum((F.col("_bkt") == i).cast("long")).alias(f"_c{i}")
-        for i in range(n_buckets)
-    ]
-    agg = bucketed.groupBy(F.window(ts_col, window).alias("win")).agg(
-        F.count(F.lit(1)).alias("rows"), *counts
+    psi = reduce(
+        operator.add,
+        (psi_term(F.col(f"_c{i}") / F.col("rows"), F.lit(q[i])) for i in range(n_buckets)),
     )
-    psi_col = None
-    for i in range(n_buckets):
-        p = F.greatest(F.col(f"_c{i}") / F.col("rows"), F.lit(EPS))
-        q = max(base.get(i, 0) / tot, EPS)
-        term = (p - F.lit(q)) * F.log(p / F.lit(q))
-        psi_col = term if psi_col is None else psi_col + term
-    return agg.select("win", "rows", F.round(psi_col, round_to).alias("psi"))
+    return agg.select("win", "rows", F.round(psi, round_to).alias("psi"))
 
 
 def windowed_chi2_stream(
@@ -343,7 +356,6 @@ def windowed_chi2_stream(
         if r["cat"] is not None
     }
     cats = sorted(base)
-    g_tot = float(sum(base.values()))
 
     c = F.col(cat_col)
     sums = [
@@ -359,23 +371,19 @@ def windowed_chi2_stream(
         .agg(F.count(F.lit(1)).alias("rows"), *sums)
     )
     tg = F.col("rows").cast("double")
-    t = F.lit(g_tot)
-    colsum = tg + t
-    chi2 = None
-    dof_cells = None
-    cells = [(F.col(f"_c{i}"), base[cat]) for i, cat in enumerate(cats)]
-    cells.append((F.col("_other"), 0.0))
-    for n, g in cells:
-        row = n + F.lit(g)
-        e1 = row * tg / colsum
-        e2 = row * t / colsum
-        term = F.when(
-            row > 0,
-            (n - e1) ** 2 / e1 + (F.lit(g) - e2) ** 2 / e2,
-        ).otherwise(F.lit(0.0))
-        present = F.when(row > 0, 1).otherwise(0)
-        chi2 = term if chi2 is None else chi2 + term
-        dof_cells = present if dof_cells is None else dof_cells + present
+    t = F.lit(float(sum(base.values())))
+    cells = [(F.col(f"_c{i}"), F.lit(base[cat])) for i, cat in enumerate(cats)]
+    cells.append((F.col("_other"), F.lit(0.0)))
+    chi2 = reduce(
+        operator.add,
+        (
+            F.when(n + g > 0, chi2_cell(n, g, tg, t)).otherwise(F.lit(0.0))
+            for n, g in cells
+        ),
+    )
+    dof_cells = reduce(
+        operator.add, (F.when(n + g > 0, 1).otherwise(0) for n, g in cells)
+    )
     return agg.select(
         "win",
         "rows",
@@ -398,45 +406,25 @@ def windowed_w1_stream(
     """Streaming Wasserstein-1 drift monitor against a static baseline —
     the spread-sensitive numeric member of the windowed family (PSI reacts
     to per-bucket ratio changes, W1 to how far mass MOVED; chi2 covers
-    unordered categories). Same discipline as ``windowed_drift_stream``:
-    one watermarked window aggregation with a conditional sum per bucket,
-    then W1 as a ROW-LOCAL expression — the bucket CDFs are running sums
-    over the n_buckets literal columns, unrolled at plan-build time, so no
-    chained aggregation and append mode stays legal. The baseline is
-    n_buckets plan-literal proportions (collected once, KBs).
+    unordered categories). Same per-bucket window aggregation as
+    ``windowed_drift_stream``, then W1 as a ROW-LOCAL expression — the
+    bucket CDFs are running sums over the n_buckets literal columns,
+    unrolled at plan-build time, so no chained aggregation and append mode
+    stays legal.
 
     W1 = Σ_b |F_win(b) − F_base(b)| · bucket_width over the full 0..n-1
     spine — gap buckets count, matching ``operators/drift.py:w1_joined``.
     Returns (win, rows, w1)."""
-    base = {r["bucket"]: r["n"] for r in baseline_hist.collect()}
-    tot = float(sum(base.values())) or 1.0
-
-    b = F.least(
-        F.greatest(F.floor(F.col(value_col) / F.lit(bucket_width)), F.lit(0)),
-        F.lit(n_buckets - 1),
-    ).cast("int")
-    bucketed = (
-        stream_df.filter(F.col(value_col).isNotNull())
-        .withColumn("_bkt", b)
-        .withWatermark(ts_col, watermark)
+    agg, q = _stream_bucket_counts(
+        stream_df, baseline_hist, value_col, ts_col, window, watermark,
+        bucket_width, n_buckets,
     )
-    counts = [
-        F.sum((F.col("_bkt") == i).cast("long")).alias(f"_c{i}")
-        for i in range(n_buckets)
-    ]
-    agg = bucketed.groupBy(F.window(ts_col, window).alias("win")).agg(
-        F.count(F.lit(1)).alias("rows"), *counts
-    )
-    w1 = None
-    cum_win = None
-    cum_base = 0.0
     # the last bucket's CDF difference is always 0 (both CDFs reach 1)
-    for i in range(n_buckets - 1):
-        p = F.col(f"_c{i}") / F.col("rows")
-        cum_win = p if cum_win is None else cum_win + p
-        cum_base += base.get(i, 0) / tot
-        term = F.abs(cum_win - F.lit(cum_base))
-        w1 = term if w1 is None else w1 + term
+    cum_win = accumulate(F.col(f"_c{i}") / F.col("rows") for i in range(n_buckets - 1))
+    cum_base = accumulate(q[: n_buckets - 1])
+    w1 = reduce(
+        operator.add, (F.abs(cw - F.lit(cb)) for cw, cb in zip(cum_win, cum_base))
+    )
     return agg.select(
         "win",
         "rows",
@@ -496,9 +484,9 @@ def windowed_rate_anomaly_stream(
     one query). A single control-plane key carries the trailing rate deque
     across micro-batches via ``applyInPandasWithState`` — state is
     O(baseline) floats and the operator sees one row per closed window, so
-    the stateful stage is KB-scale at any stream rate. Windows inside one
-    batch are scored in event-time order; watermark semantics make
-    cross-batch closes monotone.
+    the stateful stage is KB-scale at any stream rate. All windows of one
+    micro-batch are gathered across its Arrow chunks and scored in
+    event-time order; watermark semantics make cross-batch closes monotone.
 
     Returns (win_start, n_rows, n_viol, rate, mean_rate, sd_rate, z,
     anomaly) in append mode; pytest pins the concatenated output equal to
@@ -546,10 +534,12 @@ def windowed_rate_anomaly_stream(
             return float(Decimal(repr(float(x))).quantize(q, ROUND_HALF_UP))
 
         hist = list(state.get[0]) if state.exists else []
-        for pdf in pdfs:
-            if len(pdf) == 0:
-                continue
-            pdf = pdf.sort_values("win_start")
+        # one micro-batch reaches ``score`` as several Arrow chunks (at most
+        # spark.sql.execution.arrow.maxRecordsPerBatch rows each): sort the
+        # whole batch once, so no window's baseline depends on the chunking
+        chunks = [pdf for pdf in pdfs if len(pdf)]
+        if chunks:
+            pdf = pd.concat(chunks, ignore_index=True).sort_values("win_start")
             out = {
                 "win_start": [], "n_rows": [], "n_viol": [], "rate": [],
                 "mean_rate": [], "sd_rate": [], "z": [], "anomaly": [],

@@ -260,21 +260,31 @@ def test_pack_windows_single_shuffle(spark):
 
 
 def test_by_group_drift_grids_scan_once(spark, sf):
-    """The per-day drift grids (PSI/KS/JS vs the global baseline) must read
-    the data source once: the (group, bucket) aggregate is persisted, so
-    the four consuming branches (baseline, per-group totals, grand total,
-    grid join-back) are InMemoryTableScans over the KB-scale cache — the
-    parquet scan executes only inside the single cache materialization.
-    (Without the persist each branch re-planned the subtree from the
-    source: 4+ physical scans, verified before the fix.)"""
+    """The per-day drift grids (PSI/KS/JS/W1/chi2 vs the global baseline)
+    must read the data source once: the (group, key) aggregate is
+    persisted, so the four consuming branches (baseline, per-group totals,
+    grand total, grid join-back) are InMemoryTableScans over the KB-scale
+    cache — the parquet scan executes only inside the single cache
+    materialization. (Without the persist each branch re-planned the
+    subtree from the source: 4+ physical scans, verified before the fix.)
+    Each statistic registers exactly ONE tracked cache: its shared grid."""
     import __spark_entry__ as e
+    from fsharp_data_validation_spark.cache import release_caches, tracked_count
 
-    for q in (e.q_psi_by_day, e.q_ks_by_day, e.q_js_by_day):
+    for q in (
+        e.q_psi_by_day,
+        e.q_ks_by_day,
+        e.q_js_by_day,
+        e.q_w1_by_day,
+        e.q_chi2_by_day,
+    ):
+        release_caches(spark)
         df = q(spark, sf)
         df.collect()
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "InMemoryTableScan" in plan, q.__name__
-        spark.catalog.clearCache()
+        assert tracked_count() == 1, q.__name__
+    release_caches(spark)
 
 
 def test_report_path_evaluates_only_on_failing_slice(spark, sf):

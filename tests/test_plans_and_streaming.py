@@ -990,3 +990,74 @@ def test_windowed_rate_anomaly_stream_matches_batch(spark, tmp_path):
     # sd 0, z NULL
     spike = got[t0 + timedelta(minutes=8)]
     assert spike["anomaly"] is True and spike["z"] is None
+
+
+def test_windowed_rate_anomaly_stream_ignores_arrow_chunking(spark, tmp_path):
+    """16 closed windows arrive out of event-time order in ONE micro-batch,
+    split into Arrow chunks of 3 rows: each window's trailing baseline
+    must still come from the windows before it in event time, so the
+    output equals the batch ``rate_anomaly`` over the same windows."""
+    from datetime import datetime, timedelta
+
+    from pyspark.sql.types import DoubleType, LongType
+
+    from fsharp_data_validation_spark.operators.checks import rate_anomaly
+    from fsharp_data_validation_spark.streaming.validate_stream import (
+        windowed_rate_anomaly_stream,
+    )
+
+    t0 = datetime(2026, 1, 1, 12, 0, 0)
+    turns = [
+        (t0 + timedelta(minutes=w, seconds=s), s < (w * 7) % 16 + 1)
+        for w in range(16)
+        for s in range(20)
+    ]
+    batch_df = spark.createDataFrame(turns, "ts timestamp, bad boolean")
+    want = {
+        r["day"]: r
+        for r in rate_anomaly(
+            batch_df, F.date_trunc("minute", F.col("ts")), F.col("bad"), window=7
+        ).collect()
+    }
+    assert len(want) == 16
+
+    rschema = StructType(
+        [
+            StructField("win_start", TimestampType()),
+            StructField("n_rows", LongType()),
+            StructField("n_viol", LongType()),
+            StructField("rate", DoubleType()),
+        ]
+    )
+    days = sorted(want)
+    shuffled = [days[(i * 5) % 16] for i in range(16)]
+    rdir = str(tmp_path / "rates")
+    spark.createDataFrame(
+        [(d, want[d]["n_rows"], want[d]["n_viol"], want[d]["rate"]) for d in shuffled],
+        rschema,
+    ).coalesce(1).write.parquet(rdir)
+
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key, "10000")
+    spark.conf.set(key, "3")
+    try:
+        q = (
+            windowed_rate_anomaly_stream(
+                spark.readStream.schema(rschema).parquet(rdir), baseline=7
+            )
+            .writeStream.format("memory")
+            .queryName("ra_chunks_out")
+            .option("checkpointLocation", str(tmp_path / "ck"))
+            .outputMode("append")
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(120)
+        assert len(q.recentProgress) >= 1
+    finally:
+        spark.conf.set(key, old)
+    got = {r["win_start"]: r for r in spark.sql("select * from ra_chunks_out").collect()}
+    assert set(got) == set(want)
+    for ws, g in got.items():
+        for c in ("n_rows", "n_viol", "rate", "mean_rate", "sd_rate", "z", "anomaly"):
+            assert g[c] == want[ws][c], (ws, c, g[c], want[ws][c])

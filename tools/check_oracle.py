@@ -13,10 +13,12 @@ from __future__ import annotations
 
 import math
 import sys
+from pathlib import Path
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+# the checkout this script lives in, whatever the working directory
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
 
